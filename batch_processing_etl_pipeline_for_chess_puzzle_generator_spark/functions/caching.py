@@ -1,12 +1,14 @@
-"""Bounded memo-cache insert for persisted / localCheckpoint'd frames.
+"""Bounded, thread-safe memo caches for persisted / localCheckpoint'd
+frames.
 
 Several operator families memoize an expensive intermediate per
 (session, dataset) — MinHash signatures and scored pairs, CC labels,
-synthesized media tables. Each persisted frame pins executor block
-storage, so every cache shares this FIFO-bounded insert: past ``cap``
-entries the oldest frame is evicted before the new one is remembered.
-One implementation means an eviction-semantics fix lands everywhere at
-once.
+synthesized media tables. Every such cache goes through
+:func:`cache_get_or_put`. Each persisted frame pins executor block
+storage, so its insert, :func:`bounded_cache_put`, is FIFO-bounded:
+past ``cap`` entries the oldest frame is evicted before the new one is
+remembered. One implementation means an eviction-semantics fix lands
+everywhere at once.
 
 Release semantics: ``unpersist()`` frees frames cached via
 ``persist()`` immediately (CacheManager-registered plans). For

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import table
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.hashing import (
     SPARK_HASH_SQL,
@@ -115,7 +116,6 @@ def _family(i: int, base: str) -> str:
 # unbounded executor storage (the r1 caveat, extended to the pair and
 # CC caches per the r2 advice).
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
-    bounded_cache_put as _cache_put,
     cache_get_or_put as _cache_get_or_put,
 )
 
@@ -128,8 +128,12 @@ _NGRAM_POSTINGS_CACHE: dict[tuple[str, str], DataFrame] = {}
 def _signatures(spark: SparkSession, sf_dir: str,
                 n_hashes: int = N_HASHES) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, n_hashes)
-    if key in _SIG_CACHE:
-        return _SIG_CACHE[key]
+    return _cache_get_or_put(
+        _SIG_CACHE, key, lambda: _build_signatures(spark, sf_dir, n_hashes))
+
+
+def _build_signatures(spark: SparkSession, sf_dir: str,
+                      n_hashes: int) -> DataFrame:
     # spread(): the shingle explode + per-shingle md5 is the expensive
     # stage of the signature pass and it runs INSIDE the scan task —
     # a single-row-group file serializes it on one core (guide §2.5).
@@ -161,7 +165,7 @@ def _signatures(spark: SparkSession, sf_dir: str,
 
     if needs_spread(spark, sf_dir, "documents"):
         sig = sig.repartition(4, F.col("doc_id"))
-    return _cache_put(_SIG_CACHE, key, sig.persist())
+    return sig.persist()
 
 
 def _band_hash_expr(b: int, rows_per_band: int = ROWS_PER_BAND) -> str:
@@ -252,8 +256,12 @@ def doc_minhash_pairs(spark: SparkSession, sf_dir: str,
     # property-tested identical result, so one cached pair table serves
     # every salt setting (first caller's plan computes it).
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PAIRS_CACHE:
-        return _PAIRS_CACHE[key]
+    return _cache_get_or_put(
+        _PAIRS_CACHE, key, lambda: _build_pairs(spark, sf_dir, n_salts))
+
+
+def _build_pairs(spark: SparkSession, sf_dir: str,
+                 n_salts: int) -> DataFrame:
     sig = _signatures(spark, sf_dir)
     bands = sig.select(
         "doc_id",
@@ -279,15 +287,13 @@ def doc_minhash_pairs(spark: SparkSession, sf_dir: str,
     # (checkpoint storage is CacheManager-invisible — see
     # functions/caching.py); the lineage here is one join deep, so
     # truncation buys nothing.
-    return _cache_put(
-        _PAIRS_CACHE,
-        key,
+    return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select("doc_a", "doc_b",
                 F.expr(f"({agree}) / CAST({N_HASHES} AS DOUBLE)")
                 .alias("est_jaccard"))
-        .persist(),
+        .persist()
     )
 
 
@@ -543,8 +549,11 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     in practice.
     """
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CC_CACHE:
-        return _CC_CACHE[key]
+    return _cache_get_or_put(
+        _CC_CACHE, key, lambda: _build_cc_labels(spark, sf_dir))
+
+
+def _build_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         doc_minhash_pairs(spark, sf_dir)
         .filter(F.col("est_jaccard") >= CLUSTER_MIN_JACCARD)
@@ -585,7 +594,7 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         labels = new_labels
         if changed == 0:
-            return _cache_put(_CC_CACHE, key, labels)
+            return labels
 
 
 # ---------------------------------------------- end-to-end dedup corpus
@@ -1379,39 +1388,15 @@ ORACLES["doc_dup_triangles"] = f"""
 # back from the committed table). The recurring queries' only
 # documents.parquet scan is the new batch's (doc_id, source) rows for
 # attribution — plan-asserted in tests/test_dedup.py.
-_DEDUP_IDX_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
+@fixtures.cached("dedup_index")
 def _dedup_index_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures, versioned
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
         ensure_registered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DEDUP_IDX_CACHE:
-        return _DEDUP_IDX_CACHE[key]
-    with fixtures.BUILD_LOCK:
-        return _build_dedup_index(spark, sf_dir, key)
-
-
-def _build_dedup_index(spark, sf_dir, key):
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures, versioned
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
-        ensure_registered,
-    )
-
-    if key in _DEDUP_IDX_CACHE:  # double-check under BUILD_LOCK
-        return _DEDUP_IDX_CACHE[key]
-    _t0 = fixtures.start()
-    import atexit
-    import shutil
-    import tempfile
-
-    hash_path = tempfile.mkdtemp(prefix="dedup_hashes_")
-    band_path = tempfile.mkdtemp(prefix="dedup_bands_")
-    for p in (hash_path, band_path):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
+    hash_path = fixtures.tempdir("dedup_hashes_")
+    band_path = fixtures.tempdir("dedup_bands_")
 
     hashes = table(spark, sf_dir, "documents").select(
         "doc_id", stable_hash64(F.col("text")).alias("h"))
@@ -1477,8 +1462,6 @@ def _build_dedup_index(spark, sf_dir, key):
         t.join()
     if errs:
         raise errs[0]
-    _DEDUP_IDX_CACHE[key] = (hash_path, band_path)
-    fixtures.done("dedup_index", _t0)
     return hash_path, band_path
 
 

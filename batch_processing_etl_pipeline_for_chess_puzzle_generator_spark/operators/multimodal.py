@@ -885,11 +885,10 @@ _MEDIA_CACHE_MAX = 6
 
 def media_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
-        bounded_cache_put,
+        cache_get_or_put,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _MEDIA_CACHE:
+    def build() -> DataFrame:
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread
 
         # spread(): the encode mapInPandas (and every decode kernel
@@ -907,9 +906,11 @@ def media_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
         # (mins 0.4-0.7 s at BOTH core counts).
         docs = spread(spark, sf_dir, "documents",
                       table(spark, sf_dir, "documents").select("doc_id"))
-        bounded_cache_put(_MEDIA_CACHE, key, synth_media(docs, kind).persist(),
-                          cap=_MEDIA_CACHE_MAX)
-    return _MEDIA_CACHE[key]
+        return synth_media(docs, kind).persist()
+
+    return cache_get_or_put(
+        _MEDIA_CACHE, (spark.sparkContext.applicationId, sf_dir, kind), build,
+        cap=_MEDIA_CACHE_MAX)
 
 
 def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:

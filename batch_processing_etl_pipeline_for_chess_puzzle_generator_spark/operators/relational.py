@@ -1766,25 +1766,23 @@ def abc_parts_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
-        bounded_cache_put,
+        cache_get_or_put,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ABC_RANKED_CACHE:
-        ranked = _ABC_RANKED_CACHE[key]
-    else:
+    def build() -> DataFrame:
         li = spread(spark, sf_dir, "lineitem",
                     table(spark, sf_dir, "lineitem").select(
                         "l_partkey", "l_extendedprice", "l_discount"),
                     keys=("l_partkey",))
         rev = li.groupBy("l_partkey").agg(F.expr(_REV_INT).alias("r"))
-        ranked = bounded_cache_put(
-            _ABC_RANKED_CACHE,
-            key,
+        return (
             rev.repartitionByRange(F.col("r").desc(), F.col("l_partkey"))
             .withColumn("_pid", F.spark_partition_id())
-            .persist(),
+            .persist()
         )
+
+    ranked = cache_get_or_put(
+        _ABC_RANKED_CACHE, (spark.sparkContext.applicationId, sf_dir), build)
     wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         ranked.groupBy("_pid")

@@ -1297,23 +1297,23 @@ def _leakage_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     time. At production scale this is the materialized gram-postings
     table."""
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
-        bounded_cache_put,
+        cache_get_or_put,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LEAK_POSTINGS_CACHE:
-        return _LEAK_POSTINGS_CACHE[key]
-    docs = _docs_spread(spark, sf_dir, "doc_id", "text")
-    h = SPARK_HASH_SQL("concat_ws(' ', slice(ws, i, 5))")
-    grams = f"array_distinct(transform(sequence(1, size(ws) - 4), i -> {h}))"
-    ex = (
-        docs.select("doc_id", F.expr(_WORDS).alias("ws"))
-        .filter(F.expr("size(ws) >= 5"))
-        .select("doc_id", F.expr(_SPLIT_CASE).alias("split"),
-                F.explode(F.expr(grams)).alias("g"))
-        .persist()
-    )
-    return bounded_cache_put(_LEAK_POSTINGS_CACHE, key, ex)
+    def build() -> DataFrame:
+        docs = _docs_spread(spark, sf_dir, "doc_id", "text")
+        h = SPARK_HASH_SQL("concat_ws(' ', slice(ws, i, 5))")
+        grams = f"array_distinct(transform(sequence(1, size(ws) - 4), i -> {h}))"
+        return (
+            docs.select("doc_id", F.expr(_WORDS).alias("ws"))
+            .filter(F.expr("size(ws) >= 5"))
+            .select("doc_id", F.expr(_SPLIT_CASE).alias("split"),
+                    F.explode(F.expr(grams)).alias("g"))
+            .persist()
+        )
+
+    return cache_get_or_put(
+        _LEAK_POSTINGS_CACHE, (spark.sparkContext.applicationId, sf_dir), build)
 
 
 def doc_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,10 +3,13 @@ frames — no Spark needed, so the eviction logic is testable exactly)."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
     bounded_cache_put,
+    cache_get_or_put,
 )
 
 
@@ -53,3 +56,34 @@ def test_single_slot_cache_cycles():
     bounded_cache_put(cache, 2, f2, cap=1)
     assert f1.released and not f2.released
     assert list(cache) == [2]
+
+
+def test_get_or_put_race_keeps_one_frame_and_releases_the_loser():
+    """Two threads that both miss build two frames; the cache keeps the
+    first one put, both callers get it, and the other is released."""
+    cache = {}
+    built = []
+    both_missed = threading.Barrier(2, timeout=10)
+
+    def factory():
+        f = _Frame()
+        built.append(f)
+        both_missed.wait()  # neither may put before both have missed
+        return f
+
+    got = []
+    threads = [
+        threading.Thread(
+            target=lambda: got.append(cache_get_or_put(cache, "k", factory)))
+        for _ in range(2)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=10)
+    assert not any(t.is_alive() for t in threads)
+    assert len(built) == 2 and len(got) == 2
+    assert got[0] is got[1] is cache["k"]
+    winner, = (f for f in built if f is cache["k"])
+    loser, = (f for f in built if f is not cache["k"])
+    assert loser.released and not winner.released

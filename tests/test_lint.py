@@ -203,3 +203,23 @@ def test_registry_dedup_gate_catches_seeded_twin():
         for name in pair:
             assert name in oracles, f"stale ALLOW entry: {name}"
     assert 0.5 < THRESHOLD < 1.0
+
+
+def test_operators_use_the_shared_cache_mechanisms():
+    """Session fixtures go through ``@fixtures.cached`` and
+    ``fixtures.tempdir``, memo caches through ``cache_get_or_put``: a
+    hand-rolled copy of either (its own temp dir, cleanup hook, build
+    lock, timing calls or unlocked cache insert) must not come back."""
+    from tests.conftest import REPO
+
+    banned = ("tempfile.mkdtemp", "atexit.register", "BUILD_LOCK",
+              "fixtures.start(", "fixtures.done(", "bounded_cache_put")
+    ops = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark" / "operators"
+    hits = [
+        f"{path.name}:{n}: {word}"
+        for path in sorted(ops.glob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for word in banned
+        if word in line
+    ]
+    assert hits == []

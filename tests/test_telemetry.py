@@ -28,19 +28,32 @@ def test_observed_default_rowcount(spark):
     assert obs.get == {"rows": 42}
 
 
-def test_fixture_attribution_accumulates():
+def test_fixture_attribution_accumulates(monkeypatch):
     """bench.py's fixture-cost attribution: cache-miss builds recorded
     per fixture, totals snapshot/reset (r10 verdict: BENCH per-query
     numbers must separate one-time fixture cost from operator cost)."""
+    from types import SimpleNamespace
+
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
 
+    monkeypatch.setattr(fixtures, "BUILDERS", {})
+    calls = []
+
+    @fixtures.cached("demo")
+    def demo(spark, sf_dir):
+        calls.append(sf_dir)
+        return sf_dir.upper()
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
     fixtures.reset()
-    t0 = fixtures.start()
-    fixtures.done("demo", t0)
-    with fixtures.timed("demo"):
-        pass
+    assert fixtures.BUILDERS == {"demo": demo}
+    assert demo(spark, "a") == "A" and demo(spark, "a") == "A"
+    assert calls == ["a"], "a cache hit must not rebuild or re-time"
+    once = fixtures.snapshot()["demo"]
+    demo(spark, "b")  # a second key is a second build, accumulated
     snap = fixtures.snapshot()
-    assert set(snap) == {"demo"} and snap["demo"] >= 0
+    assert set(snap) == {"demo"} and snap["demo"] >= once >= 0
+    assert calls == ["a", "b"]
     assert fixtures.total() == sum(snap.values())
     fixtures.reset()
-    assert fixtures.total() == 0.0
+    assert fixtures.total() == 0.0 and fixtures.snapshot() == {}

@@ -1,13 +1,14 @@
-"""r14 optimization round: isolated per-query measurement + plan capture.
+"""Isolated per-query measurement + plan capture.
 
 Usage:
-  python tools/measure_r14.py <query> [query ...] [--sf DIR] [--plans TAG]
-                              [--reps N] [--noop]
+  python tools/measure.py <query> [query ...] [--sf DIR] [--plans ROUND/TAG]
+                          [--reps N] [--noop]
 
 For each named registry query: build the DataFrame, time the action
 (collect() — the bench methodology — or the noop sink with --noop per
-guide §1.4), and optionally write ``plans/r13/<query>_<TAG>.txt`` with
-the ``explain("formatted")`` output. Prints one JSON line per query.
+guide §1.4), and optionally write the ``explain("formatted")`` output to
+``plans/<ROUND>/<query>_<TAG>.txt`` (``--plans r15/before`` writes
+``plans/r15/<query>_before.txt``). Prints one JSON line per query.
 
 Fixture costs are attributed exactly like bench.py (fixtures.total()
 snapshots), so a 5 s entry that spends 4.5 s building a session fixture
@@ -50,7 +51,7 @@ def main() -> None:
         fixtures, get_spark,
     )
 
-    spark = get_spark("measure-r14")
+    spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
@@ -66,9 +67,11 @@ def main() -> None:
     qs = entrymod.queries()
     if names == ["ALL"]:
         names = list(qs)
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r14")
-    os.makedirs(plans_dir, exist_ok=True)
+    if tag:
+        round_dir, tag = os.path.split(tag)
+        plans_dir = os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "plans", round_dir)
+        os.makedirs(plans_dir, exist_ok=True)
 
     # warm pass at sf0.001 (same steady-state discipline as bench.py)
     warm = "/root/testdata/sf0.001"
@@ -79,7 +82,7 @@ def main() -> None:
             pass
 
     for n in names:
-        spark.sparkContext.setJobDescription(f"r14-measure: {n}")
+        spark.sparkContext.setJobDescription(f"measure: {n}")
         walls = []
         fx_total = 0.0
         for r in range(reps):
